@@ -2,12 +2,21 @@
 
 The reference's clustering is a commented-out greedy star pass
 (dna_benchmark.h:361-417, single-threaded, insertion-order dependent).
-The distributed replacement is union-find connected components via
-iterative minimum-label propagation on DataFrames: each vertex repeatedly
-adopts the smallest label in its closed neighborhood until fixpoint.
-Deterministic (labels are min ids, independent of partitioning), and every
-iteration is one shuffle on the edge key; ``localCheckpoint`` truncates the
-growing lineage so plans stay bounded at scale.
+The distributed replacement alternates large-star and small-star (Kiveris
+et al., SoCC 2014) over the oriented edge set (lo, hi), lo <= hi:
+
+  large-star  each edge (lo, hi) re-hangs hi on m(lo), the smallest vertex
+              of lo's closed neighbourhood;
+  small-star  each hi and all its smaller neighbours re-hang on the
+              smallest of those neighbours.
+
+Both keep connectivity and each component's minimum; their common fixpoint
+is a star forest centred on the minima, so labels are min ids —
+deterministic and independent of partitioning.  Rounds are O(log n) on
+paths (O(log² n) worst case), where min-label propagation needed one per
+hop of diameter.  Each round is three shuffles and one ``localCheckpoint``;
+convergence is read from a ``DataFrame.observe`` on that checkpoint, so
+it costs no extra job.
 
 Note CC ⊇ greedy-star clusters; recall per BASELINE is measured on
 dup-PAIR sets, which are identical (SURVEY §2.6).
@@ -15,8 +24,30 @@ dup-PAIR sets, which are identical (SURVEY §2.6).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+
+def _release(df: DataFrame) -> None:
+    """Drop a ``localCheckpoint``'s blocks; ``DataFrame.unpersist`` does not."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def large_star(e: DataFrame) -> DataFrame:
+    """One large-star step over oriented edges (lo, hi); ``_large`` flags
+    the edges it rewrote."""
+    # min smaller-or-equal neighbour per vertex: it scales with the vertex
+    # count, and broadcasting it exhausted the driver at 384k rows
+    mins = e.groupBy(F.col("hi").alias("v")).agg(F.min("lo").alias("m"))
+    # edges may repeat; the distinct rides the join's own shuffle on lo
+    return (
+        e.repartition("lo")
+        .distinct()
+        .join(mins.hint("shuffle_hash"), F.col("lo") == F.col("v"), "left")
+        .select(
+            F.coalesce("m", "lo").alias("lo"), "hi", (F.col("m") < F.col("lo")).alias("_large")
+        )
+    )
 
 
 def connected_components(
@@ -24,87 +55,59 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    checkpoint_every: int = 2,
+    stats: dict | None = None,
 ) -> DataFrame:
     """(id, cluster_id) for every vertex appearing in ``edges``.
 
     cluster_id = min vertex id of the component (ids: any orderable type).
-    Converges in O(log n) rounds for typical dup clusters (small diameter);
-    ``max_iter`` bounds pathological chains.
+    A round is one large-star plus one small-star step; a 1,000-vertex path
+    with its minimum at one end takes 11 rounds (⌈log₂ n⌉, plus the round
+    that sees no change).  Raises ``RuntimeError`` when ``max_iter`` rounds
+    end short of the fixpoint — a partial labelling is never returned.
+    ``stats``, when given, gets ``rounds`` and ``changed``: per round, the
+    edges large-star and small-star rewrote.
     """
-    # Symmetrize with ONE pass over ``edges`` (r6): the old
-    # union(select(u,v), select(v,u)) referenced the edge subtree TWICE, so
-    # an unpersisted upstream (the full verify chain in the pipeline) was
-    # evaluated once per branch inside this checkpoint — measured as a
-    # doubled verify stage.  explode(array(fwd, rev)) emits both directions
-    # from a single evaluation; the row set is identical.
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
-                )
-            ).alias("_e")
-        )
-        .select("_e.u", "_e.v")
-        .distinct()
-    )
-    sym = sym.localCheckpoint(eager=True)
-
-    # Fused first iteration (r6): initialize each vertex with the minimum
-    # of its CLOSED neighborhood — one groupBy, the same single shuffle the
-    # old distinct() init cost, but it already performs propagation round 1,
-    # so the loop below starts one round closer to the fixpoint.  The
-    # fixpoint (min vertex id per component) is unchanged.
-    labels = (
-        sym.groupBy(F.col("u").alias("id"))
-        .agg(F.min("v").alias("_nmin"))
-        .select("id", F.least(F.col("id"), F.col("_nmin")).alias("cluster_id"))
-        .localCheckpoint(eager=True)
-    )
-    for it in range(max_iter):
-        # every vertex receives its neighbors' current labels.  The labels
-        # table changes every round and scales with the vertex count —
-        # broadcasting it is wrong at scale and can exhaust the driver
-        # (observed at 384k rows in local mode), so force a shuffle join.
-        msgs = (
-            sym.join(labels.hint("shuffle_hash"), sym.v == labels.id)
-            .select(
-                F.col("u").alias("id"),
-                F.col("cluster_id"),
-                F.lit(None).cast("string").alias("_prev"),
+    # ONE pass over ``edges``: an unpersisted upstream (the verify chain in
+    # the pipeline) would otherwise run once per reference in this job
+    e = edges.select(
+        F.least(src, dst).alias("lo"), F.greatest(src, dst).alias("hi")
+    ).localCheckpoint(eager=True)
+    changed: list[list[int]] = []
+    for _ in range(max_iter):
+        # observed at the top of the round: an observation below the join
+        # is pruned with it when the edge set is empty
+        obs = Observation()
+        small = (
+            large_star(e)
+            .withColumn("m", F.min("lo").over(Window.partitionBy("hi")))
+            .observe(
+                obs,
+                F.count_if("_large").alias("large"),
+                F.count_if(F.col("m") < F.col("lo")).alias("small"),
             )
         )
-        # carry each vertex's previous label through the min-agg so the
-        # convergence check is a filter on the materialized result —
-        # no second join / shuffle per check
-        own = labels.select(
-            "id", "cluster_id", F.col("cluster_id").cast("string").alias("_prev")
+        # small-star: emit (m, hi) and (m, lo); for lo == m the second
+        # repeats the first and the next round's distinct drops it; the
+        # previous round's edges are released once this one is materialized
+        smaller = F.when(F.col("m") < F.col("lo"), F.col("lo")).otherwise(F.col("hi"))
+        prev, e = e, small.select(
+            F.col("m").alias("lo"), F.explode(F.array("hi", smaller)).alias("hi")
+        ).localCheckpoint(eager=True)
+        _release(prev)
+        changed.append([obs.get[k] for k in ("large", "small")])
+        if changed[-1] == [0, 0]:
+            break
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {max_iter} rounds "
+            f"(edges rewritten per round: {changed})"
         )
-        new_labels = (
-            own.union(msgs)
-            .groupBy("id")
-            .agg(
-                F.min("cluster_id").alias("cluster_id"),
-                F.max("_prev").alias("_prev"),
-            )
-        )
-        if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
-            new_labels = new_labels.localCheckpoint(eager=True)
-            changed = (
-                new_labels.filter(
-                    F.col("cluster_id").cast("string") != F.col("_prev")
-                )
-                .limit(1)
-                .count()
-            )
-            labels = new_labels.drop("_prev")
-            if changed == 0:
-                break
-        else:
-            labels = new_labels.drop("_prev")
-    return labels
+    if stats is not None:
+        stats.update(rounds=len(changed), changed=changed)
+    # star forest: both ends of every edge belong to its lo
+    return e.select(
+        F.explode(F.array("lo", "hi")).alias("id"), F.col("lo").alias("cluster_id")
+    ).distinct()
 
 
 def assign_clusters(
@@ -114,10 +117,12 @@ def assign_clusters(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Full-corpus (id, cluster_id): component label for connected rows,
-    own id for singletons (left join keeps unmatched rows broadcast-free)."""
-    comps = connected_components(dup_edges, src=src, dst=dst, max_iter=max_iter)
+    own id for singletons (left join keeps unmatched rows broadcast-free).
+    ``stats`` is passed to ``connected_components``."""
+    comps = connected_components(dup_edges, src, dst, max_iter=max_iter, stats=stats)
     return (
         all_ids.select(F.col(id_col))
         .join(comps.withColumnRenamed("id", id_col), id_col, "left")

@@ -71,14 +71,3 @@ def reads_from_fastq(spark: SparkSession, path: str) -> DataFrame:
         ((F.col("_line") - 1) / 4).cast("long").alias("read_id"),
         F.col("value").alias("seq"),
     )
-
-
-def write_edge_list(edges: DataFrame, path: str) -> None:
-    """Dup-graph sink (minhash_output_graph_file, dna_benchmark.h:419-442):
-    parquet edge table instead of a text file; node count lands in the
-    table's companion _meta."""
-    edges.write.mode("overwrite").parquet(path)
-
-
-def read_edge_list(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

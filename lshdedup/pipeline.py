@@ -10,7 +10,9 @@ Shuffle inventory (what the plan must look like at 100 TB):
                                count reuses the same partitioning
   3. verify enrich           — two joins pairs↔docs (docs side pruned to
                                id/sig/caption/phash only — never `bytes`)
-  4. CC iterations           — one shuffle per round on vertex id
+  4. CC rounds               — large-star/small-star, O(log n) rounds of
+                               three shuffles (edges on lo, min-per-hi
+                               aggregate, small-star window on hi)
 Everything else is narrow.  `bytes` is pruned at the first select and never
 travels past the scan (SURVEY §7.4).
 """
@@ -76,19 +78,17 @@ def dedup_pipeline(
         return runner.stage(name, fn) if runner else fn()
 
     # 1. exact-duplicate collapse (scale safeguard; lsh.py docstring).
-    # Non-runner path persists the shared window frame so reps (consumed
-    # via the signature cache early) and member_edges (consumed by CC
-    # late) don't each pay the content-key shuffle + window.
+    # One call on both paths.  Without a runner the shared window frame is
+    # persisted so reps (consumed early) and member_edges (consumed by CC
+    # late) don't each pay the content-key shuffle + window.  With a runner
+    # the frame is not persisted: caching it (text included) made the reps
+    # stage slower and kept the text cached for callers that never unpersist.
     key_cols = [text_col] + ([phash_col] if use_phash else [])
-    if runner:
-        reps = runner.stage("reps", lambda: exact_dup_groups(narrow, id_col, key_cols)[0])
-        exact_edges = runner.stage(
-            "exact_edges", lambda: exact_dup_groups(narrow, id_col, key_cols)[1]
-        )
-    else:
-        reps, exact_edges = exact_dup_groups(
-            narrow, id_col, key_cols, persisted=persisted
-        )
+    reps_df, exact_edges_df = exact_dup_groups(
+        narrow, id_col, key_cols, persisted=None if runner else persisted
+    )
+    reps = run("reps", lambda: reps_df)
+    exact_edges = run("exact_edges", lambda: exact_edges_df)
 
     # 2. signatures (narrow map, fused shingle+minhash UDF)
     signed = run(
@@ -150,12 +150,14 @@ def dedup_pipeline(
     edges = dup_pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).union(exact_edges.select("src", "dst"))
+    # CC rounds and per-round rewritten edges; empty when the stage resumed
+    cc_stats: dict = {}
     clusters = run(
         "clusters",
-        lambda: assign_clusters(narrow, edges, id_col=id_col),
+        lambda: assign_clusters(narrow, edges, id_col=id_col, stats=cc_stats),
     )
 
-    extra = {"runner": runner, "persisted": persisted}
+    extra = {"runner": runner, "persisted": persisted, "cc": cc_stats}
     return DedupResult(
         clusters=clusters,
         dup_pairs=dup_pairs,

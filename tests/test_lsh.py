@@ -155,3 +155,17 @@ def test_band_expr_sql_equals_column_builder(spark):
     got = df.select("id", band_hashes_expr("sig", 8, 4).alias("bh")).collect()
     want = df.select("id", column_builder("sig", 8, 4).alias("bh")).collect()
     assert got == want
+
+
+def test_band_expr_escapes_backticks(spark):
+    """A signature column whose name contains a backtick still parses and
+    hashes the same lanes as a plain name."""
+    from lshdedup.lsh import band_hashes_expr
+
+    df = spark.range(10).select(
+        F.array(*[F.xxhash64(F.col("id"), F.lit(j)) for j in range(8)]).alias("sig")
+    )
+    odd = df.withColumnRenamed("sig", "s`ig")
+    got = odd.select(band_hashes_expr("s`ig", 2, 4).alias("bh")).collect()
+    want = df.select(band_hashes_expr("sig", 2, 4).alias("bh")).collect()
+    assert got == want

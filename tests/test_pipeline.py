@@ -66,6 +66,13 @@ def test_planted_recall_and_precision(spark, result):
                 assert (members[i], members[j]) in all_planted
 
 
+def test_cc_rounds_reported(result):
+    """CC's round count and per-round rewritten edges reach the result."""
+    cc = result.extra["cc"]
+    assert cc["rounds"] == len(cc["changed"]) >= 1
+    assert cc["changed"][-1] == [0, 0]
+
+
 def test_dup_pairs_metrics_against_oracle(spark, corpus, result):
     """pair_set_metrics plumbing: F1 of verified-pairs∪exact-edges vs oracle."""
     oracle = dup_pairs_brute_force(corpus, CFG)
