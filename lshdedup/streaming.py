@@ -13,16 +13,26 @@ micro-batch
   4. appends its band rows + doc texts to the stores (insert half).
 
 Scale behavior (what changes as the store outgrows any single batch):
-  * both state stores are hash-PARTITIONED on disk (buckets by
-    pmod(band_hash, n_state_buckets), docs by pmod(xxhash64(id), ...)) and
-    every per-batch read filters to the partitions the batch actually
-    touches — per-batch work is O(batch ∪ touched buckets), never a
-    wholesale store scan;
-  * appends are compacted every ``compact_every`` batches (small-file
-    rewrite with a crash-safe rename swap), so file counts stay bounded on
+  * both state stores are flat parquet appends, probed by join: the
+    batch's band rows join the whole bucket store on (band_id, band_hash),
+    and candidates join the batch docs ∪ the whole doc store for verify.
+    An earlier layout hash-partitioned each store into 64 directories and
+    collected the touched partition ids driver-side to prune the scans.
+    The bucket-store pruning could not prune: every row lands in b bands,
+    so a batch of n rows leaves a given partition untouched with
+    probability (63/64)^(n·b) — 0.6% for n=10, b=32 — and every batch read
+    the whole store anyway, behind two collect jobs, two 64-path listing
+    jobs and two 64-file appends.  The doc store holds one row per b
+    bucket-store rows, so reading all of it adds at most 1/b to the rows
+    the probe already scans;
+  * appends are compacted every ``compact_every`` batches: a plain
+    rewrite, coalesced (no shuffle) to at most ``defaultParallelism``
+    files, with a crash-safe rename swap, so file counts stay bounded on
     long streams.
-State lives in parquet under ``state_dir``; on a real cluster these are
-Iceberg tables (partitioned the same way) and compaction is Iceberg's
+State lives in parquet under ``state_dir``.  At scale the bucket store
+is an Iceberg table bucket-partitioned on band_hash, probed through a
+storage-partitioned join (the batch's band rows shuffled to the table's
+buckets, the table read in place), and compaction is Iceberg's
 rewrite_data_files — the logic here is the sandbox stand-in.
 """
 
@@ -50,7 +60,6 @@ class StreamingDedup:
         state_dir: str,
         id_col: str = "image_id",
         text_col: str = "caption",
-        n_state_buckets: int = 64,
         compact_every: int = 16,
     ):
         self.spark = spark
@@ -58,7 +67,6 @@ class StreamingDedup:
         self.state_dir = state_dir
         self.id_col = id_col
         self.text_col = text_col
-        self.n_state_buckets = n_state_buckets
         self.compact_every = compact_every
         os.makedirs(state_dir, exist_ok=True)
 
@@ -67,11 +75,17 @@ class StreamingDedup:
 
     def _read_state(self, name: str) -> DataFrame | None:
         path = self._path(name)
-        # crash recovery: a compaction interrupted between renames leaves
-        # the previous store at <name>_old — restore it
-        old = path + "_old"
-        if not os.path.exists(path) and os.path.exists(old):
-            os.rename(old, path)
+        # crash recovery for a compaction interrupted before, between or
+        # after its renames: a rewrite never swapped in is dropped, and a
+        # store moved aside to <name>_old is restored (or, once replaced,
+        # dropped)
+        tmp, old = path + "_tmp", path + "_old"
+        if os.path.exists(old):
+            if os.path.exists(path):
+                shutil.rmtree(old)
+            else:
+                os.rename(old, path)
+        shutil.rmtree(tmp, ignore_errors=True)
         if not os.path.exists(path):
             return None
         try:
@@ -86,62 +100,38 @@ class StreamingDedup:
         open(self._path(f"_batch_{batch_id}_done"), "w").close()
 
     def _maybe_compact(self, name: str, batch_id: int) -> None:
-        """Rewrite the store's accumulated small appends into one file per
-        hash partition.  Crash-safe: new store is fully written to a temp
-        dir, then swapped in with two renames (recovery in _read_state)."""
+        """Rewrite the store's accumulated small appends into at most
+        ``defaultParallelism`` files (coalesce: no shuffle).  Crash-safe:
+        the new store is fully written to a temp dir, then swapped in with
+        two renames (recovery in _read_state)."""
         if self.compact_every <= 0 or (batch_id + 1) % self.compact_every:
             return
         df = self._read_state(name)
         if df is None:
             return
         path, tmp, old = self._path(name), self._path(name) + "_tmp", self._path(name) + "_old"
-        for p in (tmp, old):
-            if os.path.exists(p):
-                shutil.rmtree(p)
-        (
-            df.repartition("_pb")
-            .write.mode("overwrite")
-            .partitionBy("_pb")
-            .parquet(tmp)
-        )
+        n = self.spark.sparkContext.defaultParallelism
+        df.coalesce(n).write.mode("overwrite").parquet(tmp)
         os.rename(path, old)
         os.rename(tmp, path)
         shutil.rmtree(old)
-
-    def _touched(self, df: DataFrame, col: str) -> list[int]:
-        """Distinct state-partition ids referenced by ``df[col]`` — tiny
-        (≤ n_state_buckets), collected driver-side to drive partition
-        pruning on the store scan."""
-        return [
-            r["_pb"]
-            for r in df.select(F.col(col).alias("_pb")).distinct().collect()
-        ]
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         if self._batch_done(batch_id):  # replay after restart → idempotent
             return
         cfg, idc, txt = self.cfg, self.id_col, self.text_col
-        nb = self.n_state_buckets
         signed = add_signatures(
             batch.select(idc, txt), cfg, text_col=txt, phash_col="_none_"
         ).persist()
-        bands = (
-            explode_bands(signed, idc, "sig", cfg)
-            .withColumn("_pb", F.pmod(F.col("band_hash"), F.lit(nb)).cast("int"))
-            .persist()
-        )
+        bands = explode_bands(signed, idc, "sig", cfg).persist()
 
-        # query half: new rows vs accumulated store, reading ONLY the hash
-        # partitions this batch's band rows land in (partition pruning via
-        # the literal isin filter)
+        # query half: new rows vs the accumulated store, joined on the
+        # bucket key
         store = self._read_state("buckets")
         cands_new_old = None
         if store is not None:
-            touched = self._touched(bands, "_pb")
             q = bands.select("band_id", "band_hash", F.col(idc).alias("id_a"))
-            s = store.filter(F.col("_pb").isin(touched)).select(
-                "band_id", "band_hash", F.col(idc).alias("id_b")
-            )
+            s = store.select("band_id", "band_hash", F.col(idc).alias("id_b"))
             cands_new_old = (
                 q.join(s, ["band_id", "band_hash"])
                 .select("id_a", "id_b")
@@ -156,24 +146,17 @@ class StreamingDedup:
             cands_in_batch
             if cands_new_old is None
             else cands_in_batch.unionByName(cands_new_old)
-        ).persist()
+        )
 
         # exact verification needs both texts: id_a always comes from this
-        # batch; id_b may be stored — read only the doc partitions the
-        # candidate ids hash into, not the whole docs store
+        # batch; id_b may be stored
         doc_store = self._read_state("docs")
         batch_docs = signed.select(idc, txt)
-        if doc_store is not None:
-            need = cands.select(
-                F.pmod(F.xxhash64(F.col("id_b")), F.lit(nb)).cast("int").alias("_pb")
-            ).distinct()
-            touched_docs = [r["_pb"] for r in need.collect()]
-            stored_docs = doc_store.filter(F.col("_pb").isin(touched_docs)).select(
-                idc, txt
-            )
-            all_docs = batch_docs.unionByName(stored_docs)
-        else:
-            all_docs = batch_docs
+        all_docs = (
+            batch_docs
+            if doc_store is None
+            else batch_docs.unionByName(doc_store.select(idc, txt))
+        )
         left = all_docs.select(F.col(idc).alias("id_a"), F.col(txt).alias("_ta"))
         right = all_docs.select(F.col(idc).alias("id_b"), F.col(txt).alias("_tb"))
         verified = (
@@ -192,20 +175,11 @@ class StreamingDedup:
         )
         verified.write.mode("append").parquet(self._path("dup_pairs"))
 
-        # insert half: extend the partitioned stores
-        bands.write.mode("append").partitionBy("_pb").parquet(self._path("buckets"))
-        (
-            signed.select(idc, txt)
-            .withColumn(
-                "_pb", F.pmod(F.xxhash64(F.col(idc)), F.lit(nb)).cast("int")
-            )
-            .write.mode("append")
-            .partitionBy("_pb")
-            .parquet(self._path("docs"))
-        )
+        # insert half: extend the stores
+        bands.write.mode("append").parquet(self._path("buckets"))
+        batch_docs.write.mode("append").parquet(self._path("docs"))
         signed.unpersist()
         bands.unpersist()
-        cands.unpersist()
         for df in batch_persisted:
             df.unpersist()
         self._mark_done(batch_id)

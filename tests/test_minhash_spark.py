@@ -56,6 +56,15 @@ def test_minhash_similarity_expr(spark):
     assert df.select(minhash_similarity_expr(F.col("a"), F.col("b")).alias("s")).first()["s"] == 0.5
 
 
+def test_minhash_similarity_expr_ragged_is_null(spark):
+    df = spark.createDataFrame(
+        [([1, 2, 3, 4], [1, 9, 3, 7]), ([1, 2, 3, 4], [1, 2, 3]), ([1, 2], [1, 2, 3, 4])],
+        "a array<long>, b array<long>",
+    )
+    got = [r["s"] for r in df.select(minhash_similarity_expr(F.col("a"), F.col("b")).alias("s")).collect()]
+    assert got == [0.5, None, None]
+
+
 def test_word_set_estimate_m1_m2(spark, word_sets):
     """MinHash estimate ≈ exact Jaccard on the reference's word fixtures
     (test_min_hash, test.h:85-103), via the token-hash path."""

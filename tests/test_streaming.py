@@ -1,9 +1,10 @@
 """Streaming incremental dedup (query_then_insert semantics, lsh.h:126-144)
 via Structured Streaming foreachBatch over a file source."""
 
-import time
-
-from pyspark.sql import functions as F
+import itertools
+import os
+import random
+import string
 
 from lshdedup.config import DedupConfig
 from lshdedup.streaming import StreamingDedup
@@ -57,50 +58,80 @@ def test_streaming_idempotent_replay(spark, tmp_path):
     assert n1 == n2 == 1
 
 
-def test_streaming_store_partitioned_and_compacted(spark, tmp_path):
-    """State stores are hash-partitioned (_pb=N dirs) and compaction
-    rewrites the accumulated appends without changing results."""
-    import os
+def _parquet_files(path):
+    return [f for f in os.listdir(path) if f.endswith(".parquet")]
 
+
+def _pairs(dedup):
+    return {tuple(sorted((r["id_a"], r["id_b"])))
+            for r in dedup.dup_pairs().select("id_a", "id_b").collect()}
+
+
+def _filler(rng, n, tag):
+    """n rows of random letters: no two share enough 3-grams to pair."""
+    return [(f"{tag}{i}", "".join(rng.choice(string.ascii_lowercase) for _ in range(40)))
+            for i in range(n)]
+
+
+def test_streaming_store_compacted(spark, tmp_path):
+    """Compaction rewrites each store's accumulated appends into at most
+    defaultParallelism files, and a later batch probing the compacted
+    stores still finds its cross-batch pairs."""
     state = str(tmp_path / "state")
     dedup = StreamingDedup(
-        spark, CFG, state, id_col="image_id", text_col="caption",
-        n_state_buckets=8, compact_every=3,
+        spark, CFG, state, id_col="image_id", text_col="caption", compact_every=3,
     )
-    texts = [
-        ("a", "the quick brown fox jumps high"),
-        ("b", "something else entirely different"),
-        ("c", "the quick brown fox jumps high"),
-        ("d", "yet more unrelated filler words"),
-        ("e", "the quick brown fox jumps high"),
-        ("f", "final unrelated content block"),
-    ]
-    for i in range(3):
-        bdf = spark.createDataFrame(texts[2 * i : 2 * i + 2], SCHEMA)
-        dedup.process_batch(bdf, i)
+    rng = random.Random(7)
+    dup = "the quick brown fox jumps high"
+    stores = [os.path.join(state, s) for s in ("buckets", "docs")]
+    for i, key in enumerate("aceg"):
+        rows = [(key, dup)] + _filler(rng, 15, f"f{i}_")
+        dedup.process_batch(spark.createDataFrame(rows, SCHEMA), i)
+        if i == 1:
+            before = [len(_parquet_files(p)) for p in stores]
+        if i == 2:  # compaction ran at batch 2 (compact_every=3)
+            n = spark.sparkContext.defaultParallelism
+            after = [len(_parquet_files(p)) for p in stores]
+            assert all(a <= n for a in after), (after, n)
+            assert all(a < b for a, b in zip(after, before)), (after, before)
 
-    buckets = os.path.join(state, "buckets")
-    parts = [d for d in os.listdir(buckets) if d.startswith("_pb=")]
-    assert parts, "bucket store must be hash-partitioned"
-    # compaction ran at batch 2 (compact_every=3): bounded files per part
-    for d in parts:
-        files = [f for f in os.listdir(os.path.join(buckets, d))
-                 if f.endswith(".parquet")]
-        assert len(files) <= 2, (d, files)
-
-    pairs = {tuple(sorted((r["id_a"], r["id_b"])))
-             for r in dedup.dup_pairs().select("id_a", "id_b").collect()}
-    assert pairs == {("a", "c"), ("a", "e"), ("c", "e")}
+    assert _pairs(dedup) == {tuple(sorted(p)) for p in itertools.combinations("aceg", 2)}
 
 
-def test_streaming_docs_scan_is_partition_pruned(spark, tmp_path):
-    """The verify step must not re-read the whole docs store: with no
-    cross-batch candidates touching most partitions, the pruned scan reads
-    a strict subset (asserted via the pushed partition filter)."""
+def test_streaming_compaction_crash_recovery(spark, tmp_path):
+    """A compaction interrupted between its renames leaves <store>_old,
+    no <store>, and a stale <store>_tmp; the next batch restores the store,
+    drops the temp dir and still finds its cross-batch pair."""
     state = str(tmp_path / "state")
     dedup = StreamingDedup(
-        spark, CFG, state, id_col="image_id", text_col="caption",
-        n_state_buckets=8, compact_every=0,
+        spark, CFG, state, id_col="image_id", text_col="caption", compact_every=0,
+    )
+    dedup.process_batch(
+        spark.createDataFrame([("a", "the quick brown fox jumps high")], SCHEMA), 0
+    )
+    for name in ("buckets", "docs"):
+        path = os.path.join(state, name)
+        os.rename(path, path + "_old")
+        os.makedirs(path + "_tmp")
+        with open(os.path.join(path + "_tmp", "part-00000.parquet"), "w") as f:
+            f.write("half-written")
+    dedup.process_batch(
+        spark.createDataFrame([("b", "the quick brown fox jumps high")], SCHEMA), 1
+    )
+    for name in ("buckets", "docs"):
+        path = os.path.join(state, name)
+        assert _parquet_files(path)
+        assert not os.path.exists(path + "_old")
+        assert not os.path.exists(path + "_tmp")
+    assert _pairs(dedup) == {("a", "b")}
+
+
+def test_streaming_verify_reads_doc_store(spark, tmp_path):
+    """A batch whose only near-duplicate is a stored doc verifies the pair
+    against that doc's text, read from the doc store."""
+    state = str(tmp_path / "state")
+    dedup = StreamingDedup(
+        spark, CFG, state, id_col="image_id", text_col="caption", compact_every=0,
     )
     b0 = spark.createDataFrame(
         [(f"id{i}", f"unique text number {i} with words") for i in range(20)],
@@ -109,6 +140,4 @@ def test_streaming_docs_scan_is_partition_pruned(spark, tmp_path):
     dedup.process_batch(b0, 0)
     b1 = spark.createDataFrame([("id0b", "unique text number 0 with words")], SCHEMA)
     dedup.process_batch(b1, 1)
-    pairs = {tuple(sorted((r["id_a"], r["id_b"])))
-             for r in dedup.dup_pairs().select("id_a", "id_b").collect()}
-    assert ("id0", "id0b") in pairs
+    assert ("id0", "id0b") in _pairs(dedup)
