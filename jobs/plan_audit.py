@@ -3,8 +3,9 @@
 Captures `explain("formatted")` for the pipeline's headline stages over a
 parquet source and checks the plan properties the 100 TB design relies on:
 column pruning reaching the scan (no `bytes`), whole-stage codegen around
-the band explode and verify expressions, shuffle (not broadcast) joins in
-the CC large-star step, and AQE being active.
+the band explode, verify as one vectorized pair kernel with no
+interpreted lambda, shuffle (not broadcast) joins in the CC large-star
+step, and AQE being active.
 
 Run:  python jobs/plan_audit.py [out_md]
 """
@@ -53,8 +54,10 @@ def main(out_path: str = "PLANS.md") -> int:
         plan_pairs,
         "The parquet scan's ReadSchema must NOT contain `bytes`/`w`/`h`/`fmt` "
         "(column pruning reaches the scan); the bucket self-join is a shuffle "
-        "join keyed on (band_id, band_hash); verify similarity math is native "
-        "expressions inside WholeStageCodegen.",
+        "join keyed on (band_id, band_hash); verify scores each candidate "
+        "pair in one ArrowEvalPython (the vectorized pair kernel: MinHash "
+        "lane agreement + exact char-gram Jaccard) and the plan holds no "
+        "higher-order-function lambda.",
     ))
 
     signed = add_signatures(src.select("image_id", "caption", "phash"), cfg)
@@ -195,6 +198,8 @@ def main(out_path: str = "PLANS.md") -> int:
         for col in ("bytes", "fmt", "w", "h"):
             if col in cols:
                 problems.append(f"unpruned column {col!r} in scan: {schema}")
+    if "lambdafunction" in plan_pairs:
+        problems.append("dup_pairs plan evaluates an interpreted lambda")
     if "ShuffledHashJoin" not in sections[2][1] or "BroadcastHashJoin" in sections[2][1]:
         problems.append("CC large-star join is not a ShuffledHashJoin")
     if plan_rollup:

@@ -10,8 +10,12 @@ skipped on rerun — resumability is table-existence, not driver state, so a
 killed job resumes mid-pipeline.
 
 Every completed stage appends one JSON metrics line (rows, wall seconds,
-per-partition row counts = lineage, config hash) to ``metrics.jsonl`` and
-to a queryable ``_metrics`` parquet table.
+per-partition row counts = lineage, config hash) to ``metrics.jsonl``,
+queryable through ``metrics_df()``.  The lineage comes from the written
+files' parquet footers (row count per part file), so it runs no Spark job;
+on Iceberg the same counts are in the table's file metadata.  The marker
+also records the stage's schema, so reading a stage back (after its
+write, or on resume) needs no schema-inference job either.
 """
 
 from __future__ import annotations
@@ -22,8 +26,9 @@ import os
 import time
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from lshdedup.config import DedupConfig
 
@@ -48,20 +53,37 @@ class StageRunner:
     def _path(self, stage: str) -> str:
         return os.path.join(self.root, stage)
 
-    def _complete(self, stage: str) -> bool:
-        p = self._path(stage)
-        marker = os.path.join(p, "_LSHDEDUP_DONE.json")
+    def _marker(self, stage: str) -> dict | None:
+        """The stage's completion marker, if it matches this config."""
+        marker = os.path.join(self._path(stage), "_LSHDEDUP_DONE.json")
         if not os.path.exists(marker):
-            return False
+            return None
         with open(marker) as fh:
             meta = json.load(fh)
-        return meta.get("cfg_hash") == self.cfg_hash
+        return meta if meta.get("cfg_hash") == self.cfg_hash else None
 
     def _write(self, stage: str, df: DataFrame) -> None:
         df.write.mode("overwrite").parquet(self._path(stage))
 
-    def _read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(stage))
+    def _read(self, stage: str, schema: StructType | None = None) -> DataFrame:
+        # a given schema skips parquet's footer-inference job (file sources
+        # read every column back nullable either way)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._path(stage))
+
+    def _lineage(self, stage: str) -> dict:
+        """Row counts per written part file, from the parquet footers."""
+        parts = {}
+        for name in os.listdir(self._path(stage)):
+            if name.startswith("part-") and name.endswith(".parquet"):
+                rows = pq.read_metadata(os.path.join(self._path(stage), name)).num_rows
+                if rows:
+                    parts[int(name.split("-")[1])] = rows
+        return {
+            "rows": sum(parts.values()),
+            "n_partitions": len(parts),
+            "partition_rows": dict(sorted(parts.items())),
+        }
 
     # -- the stage wrapper --
     def stage(
@@ -71,13 +93,15 @@ class StageRunner:
         lineage: bool = True,
     ) -> DataFrame:
         """Run (or resume) one stage; returns the materialized output."""
-        if self._complete(name):
+        done = self._marker(name)
+        if done is not None:
             self.events.append({"stage": name, "resumed": True})
-            return self._read(name)
+            schema = done.get("schema")
+            return self._read(name, StructType.fromJson(schema) if schema else None)
         t0 = time.perf_counter()
         out = fn()
         self._write(name, out)
-        result = self._read(name)
+        result = self._read(name, out.schema)
         wall = time.perf_counter() - t0
         meta: dict = {
             "stage": name,
@@ -87,16 +111,9 @@ class StageRunner:
             "run_id": self.cfg.run_id,
         }
         if lineage:
-            parts = (
-                result.groupBy(F.spark_partition_id().alias("partition"))
-                .agg(F.count(F.lit(1)).alias("rows"))
-                .collect()
-            )
-            meta["rows"] = int(sum(r["rows"] for r in parts))
-            meta["n_partitions"] = len(parts)
-            meta["partition_rows"] = {int(r["partition"]): int(r["rows"]) for r in parts}
+            meta.update(self._lineage(name))
         with open(os.path.join(self._path(name), "_LSHDEDUP_DONE.json"), "w") as fh:
-            json.dump(meta, fh)
+            json.dump({**meta, "schema": out.schema.jsonValue()}, fh)
         with open(os.path.join(self.root, "metrics.jsonl"), "a") as fh:
             fh.write(json.dumps(meta) + "\n")
         self.events.append(meta)

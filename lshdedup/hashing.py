@@ -351,6 +351,29 @@ def _gram_hashes(
     return flat, np.stack([starts, ends], axis=1)
 
 
+def _string_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets as int64, UTF-8 bytes) of a non-empty, null-free Arrow
+    string or large_string array, zero copy: row i is
+    ``data[offs[i]:offs[i+1]]``."""
+    import pyarrow as pa
+
+    off_t = np.int64 if pa.types.is_large_string(arr.type) else np.int32
+    offs = np.frombuffer(arr.buffers()[1], dtype=off_t)[
+        arr.offset : arr.offset + len(arr) + 1
+    ].astype(np.int64)
+    data_buf = arr.buffers()[2]
+    data = (
+        np.frombuffer(data_buf, dtype=np.uint8)
+        if data_buf is not None
+        else np.empty(0, dtype=np.uint8)
+    )
+    if offs[-1] > data.size or np.any(np.diff(offs) < 0):
+        # same class of guard as _dense_batch_to_sparse: a sliced or
+        # corrupt buffer must raise, never mis-assign bytes to rows
+        raise ValueError("Arrow string offsets inconsistent with data buffer")
+    return offs, data
+
+
 def series_grams(
     texts, k: int, hasher=None
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -379,19 +402,7 @@ def series_grams(
             np.empty(0, dtype=np.uint8),
             np.zeros(1, dtype=np.int64),
         )
-    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
-        arr.offset : arr.offset + n + 1
-    ].astype(np.int64)
-    data_buf = arr.buffers()[2]
-    data = (
-        np.frombuffer(data_buf, dtype=np.uint8)
-        if data_buf is not None
-        else np.empty(0, dtype=np.uint8)
-    )
-    if offs[-1] > data.size or np.any(np.diff(offs) < 0):
-        # same class of guard as _dense_batch_to_sparse: a sliced or
-        # corrupt buffer must raise, never mis-assign bytes to rows
-        raise ValueError("series_grams: Arrow offsets inconsistent with data buffer")
+    offs, data = _string_buffers(arr)
     orig_lens = np.diff(offs)
     short = orig_lens < k
     if not short.any():
@@ -408,6 +419,114 @@ def series_grams(
     buf = np.zeros(total, dtype=np.uint8)  # zeros = the <k padding
     buf[valid] = data[src[valid]]
     return (*_gram_hashes(buf, out_lens, k, hasher), data, offs)
+
+
+# The one gram of a null string: distinct from every string's grams, so
+# null∼null is 1.0 but null∼'' is 0.0 (as with Spark's xxhash64(null)).
+_NULL_GRAM = U64(0x6A09E667F3BCC909)
+
+
+def char_gram_hashes(texts, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """FNV-1a 64 of every CODE-POINT k-gram of each string of an Arrow
+    string array — the hashed form of shingle.char_shingles_expr (Spark's
+    ``substring``/``length`` count code points).  series_grams hashes BYTE
+    k-grams, which differ on non-ASCII text.
+
+    Code points start at the UTF-8 bytes with ``(b & 0xC0) != 0x80``; a
+    gram spans k of them.  A string of fewer than k code points is one
+    whole-string gram ('' included); a null is one ``_NULL_GRAM``.  The
+    spans are hashed in one vector pass per byte offset (≤ 4·k passes).
+
+    Returns (flat hashes uint64, grams per row int64).
+    """
+    import pyarrow.compute as pc
+
+    n = len(texts)
+    nulls = texts.is_null().to_numpy(zero_copy_only=False) if texts.null_count else None
+    if nulls is not None:
+        texts = pc.fill_null(texts, "")
+    offs, data = _string_buffers(texts)
+    base = offs[0]
+    body = data[base : offs[-1]]
+    ascii_only = body.size == 0 or int(body.max()) < 0x80
+    if ascii_only:                                 # every byte is a code point
+        first_cp = offs[:-1] - base
+        n_cp = np.diff(offs)
+    else:
+        is_start = (body & 0xC0) != 0x80
+        cps = np.flatnonzero(is_start) + base      # byte offset of each code point
+        cps = np.append(cps, offs[-1])             # + the end of the last row
+        ccum = np.zeros(body.size + 1, dtype=np.int64)
+        np.cumsum(is_start, out=ccum[1:])
+        first_cp = ccum[offs[:-1] - base]          # row's first index into cps
+        n_cp = ccum[offs[1:] - base] - first_cp
+    grams = np.maximum(n_cp - (k - 1), 1)
+    total = int(grams.sum())
+    gram_offs = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(grams, out=gram_offs[1:])
+    # code-point index of each gram's first code point, and its length in
+    # code points (k, or the whole of a shorter row)
+    cp0 = np.repeat(first_cp - gram_offs[:-1], grams)
+    cp0 += np.arange(total, dtype=np.int64)
+    span = np.repeat(np.minimum(n_cp, k), grams)
+    if ascii_only:
+        start, lens = cp0 + base, span
+    else:
+        # a row's first code point starts at its first byte, and the code
+        # point after its last starts at the next row's first byte, so
+        # spans of short and empty rows need no special case
+        start = cps[cp0]
+        cp0 += span
+        lens = cps[cp0] - start
+    h = np.full(total, _FNV_OFFSET, dtype=U64)
+    b = np.empty(total, dtype=U64)
+    uniform = total == 0 or int(lens.min()) == int(lens.max())
+    for t in range(int(lens.max()) if total else 0):
+        np.copyto(b, data.take(start, mode="clip"), casting="unsafe")
+        live = True if uniform else lens > t
+        np.bitwise_xor(h, b, out=h, where=live)
+        np.multiply(h, _FNV_PRIME, out=h, where=live)
+        start += 1
+    if nulls is not None:
+        h[gram_offs[:-1][nulls]] = _NULL_GRAM
+    return h, grams
+
+
+def _distinct_row_grams(h: np.ndarray, grams: np.ndarray, row_bits: int) -> np.ndarray:
+    """Sorted distinct (row, gram) pairs as ONE 64-bit key each: the row
+    number in the top ``row_bits``, the gram hash's high bits below it.
+    One plain sort dedups every row's set at once and keeps the row
+    recoverable (np.lexsort on (row, h) is several times slower, an
+    argsort carrying the row along about 2.5×).  FNV-1a mixes upward, so
+    the dropped low bits are its weakest; grams collide only within a
+    row, with probability ~grams²/2^(64-row_bits)."""
+    key = np.repeat(np.arange(grams.size, dtype=U64), grams)
+    np.left_shift(key, U64(64 - row_bits), out=key)
+    np.bitwise_or(key, h >> U64(row_bits), out=key)
+    key.sort()
+    first = np.ones(key.size, dtype=bool)
+    np.not_equal(key[1:], key[:-1], out=first[1:])
+    return key[first]
+
+
+def char_gram_pair_counts(texts_a, texts_b, k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(|A∩B|, |A|, |B|) per row for the distinct code-point k-gram sets of
+    two aligned Arrow string arrays (row i of ``texts_a`` vs row i of
+    ``texts_b``) — exact Jaccard's counts up to hash collisions.  Both
+    sides key their grams by the same row, so the intersection is a
+    binary search of A's keys in B's."""
+    n = len(texts_a)
+    if n == 0:
+        return (np.zeros(0, dtype=np.int64),) * 3
+    row_bits = max(int(n - 1).bit_length(), 1)
+    ka = _distinct_row_grams(*char_gram_hashes(texts_a, k), row_bits)
+    kb = _distinct_row_grams(*char_gram_hashes(texts_b, k), row_bits)
+    pos = np.minimum(np.searchsorted(kb, ka), kb.size - 1)
+
+    def per_row(keys: np.ndarray) -> np.ndarray:
+        return np.bincount((keys >> U64(64 - row_bits)).astype(np.int64), minlength=n)
+
+    return per_row(ka[kb[pos] == ka]), per_row(ka), per_row(kb)
 
 
 def phash_window_hashes(

@@ -230,13 +230,15 @@ def merge_signatures_expr(sig_a: Column, sig_b: Column) -> Column:
 
 def minhash_similarity_expr(sig_a: Column, sig_b: Column) -> Column:
     """Estimated Jaccard = fraction of equal lanes (minhash.h:188-207),
-    as a native expression (no UDF on the verify hot path).
+    as a native expression, for ad-hoc queries over signature pairs.
+    verify_pairs computes the same quotient in its Arrow pair kernel
+    (verify.lane_agreement): this form runs two interpreted lambdas per
+    lane.
 
     size(filter(zip_with(=))) instead of aggregate(zip_with(cast)) — the
     same integer equal-lane count (bit-identical quotient), measured ~3x
     cheaper: one interpreted lambda pass instead of two, and no per-lane
-    int casts.  This is the per-candidate hot expression of the verify
-    prefilter (evaluated once per candidate pair).
+    int casts.
 
     Ragged signatures (sizes differ) give NULL, not a number: zip_with
     pads the shorter side with nulls, which would count as unequal lanes."""

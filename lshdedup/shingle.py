@@ -5,8 +5,9 @@ over a string → weighted set (distinct shingle + occurrence count), whole
 string if len < k.  Two Spark forms:
 
   1. Native column expressions (this module) — the shingle set as an
-     array/long-format DataFrame, used by exact-Jaccard verification,
-     SQL-oracle queries, and tests.  Stays entirely in whole-stage codegen.
+     array/long-format DataFrame, used by the doc queries' exact Jaccard,
+     the brute-force oracle and tests.  (Pair verification hashes the same
+     code-point grams in its Arrow kernel, hashing.char_gram_hashes.)
   2. A fused shingle→hash→signature pandas UDF (minhash.py) — the hot path,
      which never materializes shingle strings at all.
 

@@ -9,7 +9,8 @@ micro-batch
   1. signs its rows (fused shingle+minhash UDF),
   2. joins its band rows against the accumulated bucket store
      (query half) and self-joins within the batch (the insert-order pairs),
-  3. verifies candidates exactly and appends dup pairs,
+  3. verifies candidates by exact char-gram Jaccard with batch verify's
+     pair kernel (verify.pair_scores) and appends dup pairs,
   4. appends its band rows + doc texts to the stores (insert half).
 
 Scale behavior (what changes as the store outgrows any single batch):
@@ -47,7 +48,7 @@ from pyspark.sql import functions as F
 from lshdedup.config import DedupConfig
 from lshdedup.lsh import candidate_pairs, explode_bands
 from lshdedup.minhash import add_signatures
-from lshdedup.shingle import distinct_char_shingles_expr, exact_jaccard_expr
+from lshdedup.verify import pair_scores
 
 
 class StreamingDedup:
@@ -148,8 +149,9 @@ class StreamingDedup:
             else cands_in_batch.unionByName(cands_new_old)
         )
 
-        # exact verification needs both texts: id_a always comes from this
-        # batch; id_b may be stored
+        # exact verification (the batch pipeline's pair-scoring kernel, on
+        # texts alone) needs both texts: id_a always comes from this batch;
+        # id_b may be stored
         doc_store = self._read_state("docs")
         batch_docs = signed.select(idc, txt)
         all_docs = (
@@ -162,15 +164,9 @@ class StreamingDedup:
         verified = (
             cands.join(left, "id_a")
             .join(right, "id_b")
-            .withColumn(
-                "jaccard",
-                exact_jaccard_expr(
-                    distinct_char_shingles_expr(F.col("_ta"), cfg.k),
-                    distinct_char_shingles_expr(F.col("_tb"), cfg.k),
-                ),
-            )
-            .filter(F.col("jaccard") >= cfg.threshold)
-            .select("id_a", "id_b", "jaccard")
+            .withColumn("_s", pair_scores(cfg.k, text_a=F.col("_ta"), text_b=F.col("_tb")))
+            .filter(F.col("_s.jaccard") >= cfg.threshold)
+            .select("id_a", "id_b", F.col("_s.jaccard").alias("jaccard"))
             .withColumn("batch_id", F.lit(batch_id))
         )
         verified.write.mode("append").parquet(self._path("dup_pairs"))

@@ -2,25 +2,34 @@
 (dna_benchmark.h:197-225, filter :209-214) plus the graft's extra precision
 paths (exact Jaccard, SimHash hamming, suffix-automaton LCS substring).
 
-Everything cheap is a native column expression (minhash similarity, exact
-Jaccard over shingle arrays, simhash hamming, phash hamming) so the verify
-join output never leaves the JVM; only the optional LCS path (inherently
-per-pair sequential) is a pandas UDF, and it runs last, on the
-already-threshold-filtered remnant.
+Pair scoring is ONE vectorized Arrow UDF (``pair_scores``), evaluated once
+per candidate pair and shared by batch verify and streaming.  Per Arrow
+batch it computes the MinHash lane agreement as one equality reduction
+over the flattened signature buffers and, for the pairs that pass the
+prefilter only, exact char-k-gram Jaccard counts
+(hashing.char_gram_pair_counts) — numpy over Arrow buffers, no per-row
+Python.  Spark has no native form of either that avoids higher-order
+functions: the lane count was zip_with + filter and the gram sets were
+transform(sequence, substring) + transform(xxhash64), about 1,250 lambda
+calls per pair, which Spark does not compile and runs interpreted.  The
+hamming channels (pHash, SimHash) stay native expressions; the optional
+LCS path (inherently per-pair sequential) is a pandas UDF and runs last,
+on the prefiltered remnant.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from lshdedup.config import DedupConfig
-from lshdedup.minhash import minhash_similarity_expr
-from lshdedup.shingle import distinct_char_shingles_expr, exact_jaccard_expr
+from lshdedup.hashing import char_gram_pair_counts
 from lshdedup.simhash import hamming_expr
 
 
@@ -111,6 +120,115 @@ def lcs_ratio_udf():
     return lcs
 
 
+_SCORES = "mh_sim double, jaccard double, inter bigint, n_a bigint, n_b bigint"
+
+
+def lane_agreement(sig_a: pa.Array, sig_b: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """Per row, the fraction of equal lanes of two list<int64> signature
+    arrays (minhash.h:188-207), and where it is defined: a null, empty or
+    ragged (sizes differ) pair has no value, as with
+    minhash_similarity_expr.  Signature lanes are never null."""
+    n = len(sig_a)
+    oa = np.asarray(sig_a.offsets, dtype=np.int64)
+    ob = np.asarray(sig_b.offsets, dtype=np.int64)
+    lens = np.diff(oa)
+    valid = (lens == np.diff(ob)) & (lens > 0)
+    for sig in (sig_a, sig_b):
+        if sig.null_count:
+            valid &= ~sig.is_null().to_numpy(zero_copy_only=False)
+    va = sig_a.values.to_numpy()
+    vb = sig_b.values.to_numpy()
+    m = int(lens[0]) if n else 0
+    if valid.all() and (lens == m).all():
+        # every pair has m lanes: the child buffers are (n, m) matrices
+        eq = (
+            va[oa[0] : oa[0] + n * m].reshape(n, m) == vb[ob[0] : ob[0] + n * m].reshape(n, m)
+        ).sum(axis=1)
+    else:
+        rows = np.flatnonzero(valid)
+        rl = lens[rows]
+        rep = np.repeat(rows, rl)
+        lane = np.arange(int(rl.sum()), dtype=np.int64) - np.repeat(np.cumsum(rl) - rl, rl)
+        eq = np.bincount(rep, weights=va[oa[rep] + lane] == vb[ob[rep] + lane], minlength=n)
+    sim = np.zeros(n, dtype=np.float64)
+    np.divide(eq, lens, out=sim, where=valid)
+    return sim, valid
+
+
+def score_pairs(
+    sig_a: pa.Array,
+    sig_b: pa.Array,
+    text_a: pa.Array,
+    text_b: pa.Array,
+    gate: pa.Array,
+    k: int,
+    mh_floor: float,
+    grams: bool,
+) -> pa.StructArray:
+    """One Arrow batch of candidate pairs → struct<mh_sim, jaccard, inter,
+    n_a, n_b>.  A pair is scored (its char-k-gram sets derived) when
+    ``gate`` holds or its mh_sim reaches ``mh_floor``; the gram fields of
+    the others are NULL, so gram work scales with prefilter survivors."""
+    n = len(sig_a)
+    sim, valid = lane_agreement(sig_a, sig_b)
+    scored = (
+        gate.fill_null(False).to_numpy(zero_copy_only=False) | (valid & (sim >= mh_floor))
+        if grams
+        else np.zeros(n, dtype=bool)
+    )
+    counts = np.zeros((3, n), dtype=np.int64)
+    jac = np.zeros(n, dtype=np.float64)
+    if scored.any():
+        keep = pa.array(scored)
+        inter, n_a, n_b = char_gram_pair_counts(text_a.filter(keep), text_b.filter(keep), k)
+        counts[:, scored] = inter, n_a, n_b
+        # every string has at least one gram ('' and null one each), so the
+        # union is never empty
+        jac[scored] = inter / (n_a + n_b - inter)
+    unscored = ~scored
+    return pa.StructArray.from_arrays(
+        [pa.array(sim, mask=~valid), pa.array(jac, mask=unscored)]
+        + [pa.array(c, mask=unscored) for c in counts],
+        names=["mh_sim", "jaccard", "inter", "n_a", "n_b"],
+    )
+
+
+def pair_scores(
+    k: int,
+    sig_a: Column | None = None,
+    sig_b: Column | None = None,
+    text_a: Column | None = None,
+    text_b: Column | None = None,
+    gate: Column | None = None,
+    mh_floor: float = float("inf"),
+) -> Column:
+    """The pair-scoring kernel as one struct column <mh_sim, jaccard,
+    inter, n_a, n_b> (score_pairs).  Without signatures mh_sim is NULL;
+    without texts no grams are derived; without ``gate`` every pair is
+    scored.
+
+    Marked nondeterministic so Catalyst evaluates it once per pair: a
+    deterministic Python UDF read by both a filter and a projection is
+    pushed into each and planned as two ArrowEvalPython nodes."""
+    grams = text_a is not None
+    no_sig = F.lit(None).cast("array<bigint>")
+    no_text = F.lit(None).cast("string")
+
+    @F.arrow_udf(_SCORES)
+    def scores(
+        sa: pa.Array, sb: pa.Array, ta: pa.Array, tb: pa.Array, g: pa.Array
+    ) -> pa.Array:
+        return score_pairs(sa, sb, ta, tb, g, k, mh_floor, grams)
+
+    return scores.asNondeterministic()(
+        no_sig if sig_a is None else sig_a,
+        no_sig if sig_b is None else sig_b,
+        no_text if text_a is None else text_a,
+        no_text if text_b is None else text_b,
+        F.lit(True) if gate is None else gate,
+    )
+
+
 def verify_pairs(
     pairs: DataFrame,
     docs: DataFrame,
@@ -140,70 +258,49 @@ def verify_pairs(
     want_simhash = (
         cfg.verify_mode == "exact+simhash" and simhash_col is not None
     )
-    # Shingle-derivation placement (r6; guide §8 "decide with small rows,
-    # move/compute the heavy thing late"): the expensive per-side work —
-    # distinct shingle set + xxhash64 per shingle, multi-KB arrays — is
-    # DEFERRED below the enrich join and below the cheap prefilter
-    # whenever the prefilter doesn't itself need gram counts:
-    #   * join build sides carry the ~0.2 KB caption instead of a multi-KB
-    #     shingle array per doc (smaller broadcast/shuffle);
-    #   * docs in no candidate pair never compute shingles at all — at
-    #     100 TB the corpus-wide prep was the dominant verify-stage cost;
-    #   * with whole-stage codegen the post-filter projection evaluates
-    #     only for pairs surviving the 6σ/phash screen (≈ true dups), so
-    #     shingle work scales with |dups|, not |candidates| or |docs|.
-    # Cost: a doc in several surviving pairs re-derives its set once per
-    # pair (values identical; multiplicity bounded by bucket_cap).  The
-    # LCS screen needs the gram intersection INSIDE the prefilter, so
-    # that configuration keeps the per-doc precompute shape.
-    # Exact Jaccard on 64-bit-hashed shingles equals string-set Jaccard up
-    # to negligible collisions, and |A∪B| = |A|+|B|−|A∩B| means the union
-    # array is never materialized (unchanged from r4).
-    need_text = cfg.lcs_min_ratio > 0
-    lcs_screen = need_text and cfg.lcs_screen_slack > 0
-    defer_sh = cfg.verify_mode != "minhash" and not lcs_screen
-    prep_cols = [F.col(id_col), F.col(sig_col)]
-    if cfg.verify_mode != "minhash" and not defer_sh:
-        sh = F.transform(
-            distinct_char_shingles_expr(F.col(text_col), cfg.k),
-            lambda s: F.xxhash64(s),
-        )
-        prep_cols += [sh.alias("_sh"), F.size(sh).alias("_nsh")]
-    if need_text or defer_sh:
-        prep_cols.append(F.col(text_col))
-    if use_phash:
-        prep_cols.append(F.col(phash_col))
-    if want_simhash:
-        prep_cols.append(F.col(simhash_col))
-    prepped = docs.select(*prep_cols)
+    exact = cfg.verify_mode != "minhash"
+    cols = (
+        [sig_col]
+        + ([text_col] if exact else [])
+        + ([phash_col] if use_phash else [])
+        + ([simhash_col] if want_simhash else [])
+    )
+    rich = enrich_pairs(pairs, docs.select(id_col, *cols), id_col, cols)
 
-    cols = [c for c in prepped.columns if c != id_col]
-    rich = enrich_pairs(pairs, prepped, id_col, cols)
+    def sides(c: str) -> tuple[Column, Column]:
+        return F.col(f"{c}_a"), F.col(f"{c}_b")
 
-    mh = minhash_similarity_expr(F.col(f"{sig_col}_a"), F.col(f"{sig_col}_b"))
-    out = rich.withColumn("mh_sim", mh)
-    if cfg.verify_mode == "minhash":
+    if not exact:
+        out = rich.withColumn("mh_sim", pair_scores(cfg.k, *sides(sig_col))["mh_sim"])
         out = out.withColumn("is_dup", F.col("mh_sim") >= cfg.threshold)
-        keep = ["id_a", "id_b", "mh_sim", "is_dup"]
-        return out.select(*keep)
+        return out.select("id_a", "id_b", "mh_sim", "is_dup")
 
+    # channels that accept a pair whatever its MinHash estimate
+    hamming = {}
+    if use_phash:
+        hamming["phash_hamming"] = hamming_expr(*sides(phash_col))
+    if want_simhash:
+        hamming["simhash_hamming"] = hamming_expr(*sides(simhash_col))
+    channel = F.lit(False)
+    for h in hamming.values():
+        channel = channel | (h <= cfg.simhash_max_hamming)
     # cheap prefilter before the exact intersection: with n_perm lanes the
     # estimator's s.d. is ≤ 0.5/√n_perm, so a margin of 6σ below the
-    # threshold cannot drop a true pair; phash-channel pairs are kept
-    # unconditionally
-    margin = 3.0 / (cfg.n_perm ** 0.5)
-    pre = F.col("mh_sim") >= cfg.threshold - margin
-    if use_phash:
-        pre = pre | (
-            hamming_expr(F.col(f"{phash_col}_a"), F.col(f"{phash_col}_b"))
-            <= cfg.simhash_max_hamming
-        )
-    if want_simhash:
-        pre = pre | (
-            hamming_expr(F.col(f"{simhash_col}_a"), F.col(f"{simhash_col}_b"))
-            <= cfg.simhash_max_hamming
-        )
-    if cfg.lcs_min_ratio > 0:
+    # threshold cannot drop a true pair; hamming-channel pairs are kept
+    # unconditionally.  The kernel derives gram sets only for the pairs
+    # this keeps — except with the LCS channel on, whose screen below
+    # needs every candidate's gram counts.
+    mh_floor = cfg.threshold - 3.0 / (cfg.n_perm ** 0.5)
+    lcs = cfg.lcs_min_ratio > 0
+    out = rich.withColumn(
+        "_s",
+        pair_scores(
+            cfg.k, *sides(sig_col), *sides(text_col),
+            gate=F.lit(True) if lcs else channel, mh_floor=mh_floor,
+        ),
+    )
+    pre = (F.col("_s.mh_sim") >= mh_floor) | channel
+    if lcs:
         # The LCS channel must NOT disable the prefilter (the
         # suffix-automaton UDF is the most expensive stage; it has to see a
         # bounded remnant, not every candidate).  Native screen, a pair
@@ -221,56 +318,25 @@ def verify_pairs(
         if cfg.lcs_screen_slack <= 0:
             pre = F.lit(True)
         else:
-            inter_pre = F.size(F.array_intersect(F.col("_sh_a"), F.col("_sh_b")))
-            min_len = F.least(
-                F.length(F.col(f"{text_col}_a")), F.length(F.col(f"{text_col}_b"))
-            )
+            inter = F.col("_s.inter")
+            min_len = F.least(*[F.length(c) for c in sides(text_col)])
             required = F.ceil(F.lit(cfg.lcs_min_ratio) * min_len) - F.lit(cfg.k - 1)
-            smaller_nsh = F.least(F.col("_nsh_a"), F.col("_nsh_b"))
+            smaller = F.least(F.col("_s.n_a"), F.col("_s.n_b"))
             slack = F.lit(cfg.lcs_screen_slack)
             pre = (
                 pre
-                | (inter_pre * slack >= required)
-                | (inter_pre * slack >= F.lit(cfg.lcs_min_ratio) * smaller_nsh)
+                | (inter * slack >= required)
+                | (inter * slack >= F.lit(cfg.lcs_min_ratio) * smaller)
             )
-    out = out.filter(pre)
-    if defer_sh:
-        # derive the hashed shingle sets NOW — after the join, after the
-        # prefilter — as real projection columns so each evaluates once
-        for side in ("a", "b"):
-            sh_side = F.transform(
-                distinct_char_shingles_expr(F.col(f"{text_col}_{side}"), cfg.k),
-                lambda s: F.xxhash64(s),
-            )
-            out = out.withColumn(f"_sh_{side}", sh_side).withColumn(
-                f"_nsh_{side}", F.size(F.col(f"_sh_{side}"))
-            )
-    inter = F.size(F.array_intersect(F.col("_sh_a"), F.col("_sh_b")))
-    union = F.col("_nsh_a") + F.col("_nsh_b") - inter
-    jac = F.when(union == 0, F.lit(1.0)).otherwise(inter.cast("double") / union)
-    out = out.withColumn("jaccard", jac)
+    out = out.filter(pre).withColumns(
+        {"mh_sim": F.col("_s.mh_sim"), "jaccard": F.col("_s.jaccard"), **hamming}
+    )
     dup: Column = F.col("jaccard") >= cfg.threshold
-    keep = ["id_a", "id_b", "mh_sim", "jaccard"]
-    if use_phash:
-        out = out.withColumn(
-            "phash_hamming",
-            hamming_expr(F.col(f"{phash_col}_a"), F.col(f"{phash_col}_b")),
-        )
-        dup = dup | (F.col("phash_hamming") <= cfg.simhash_max_hamming)
-        keep.append("phash_hamming")
-    if want_simhash:
-        out = out.withColumn(
-            "simhash_hamming",
-            hamming_expr(F.col(f"{simhash_col}_a"), F.col(f"{simhash_col}_b")),
-        )
-        dup = dup | (F.col("simhash_hamming") <= cfg.simhash_max_hamming)
-        keep.append("simhash_hamming")
-    if cfg.lcs_min_ratio > 0:
-        out = out.withColumn(
-            "lcs_ratio", lcs_ratio_udf()(F.col(f"{text_col}_a"), F.col(f"{text_col}_b"))
-        )
+    for name in hamming:
+        dup = dup | (F.col(name) <= cfg.simhash_max_hamming)
+    keep = ["id_a", "id_b", "mh_sim", "jaccard", *hamming]
+    if lcs:
+        out = out.withColumn("lcs_ratio", lcs_ratio_udf()(*sides(text_col)))
         dup = dup | (F.col("lcs_ratio") >= cfg.lcs_min_ratio)
         keep.append("lcs_ratio")
-    out = out.withColumn("is_dup", dup)
-    keep.append("is_dup")
-    return out.select(*keep)
+    return out.withColumn("is_dup", dup).select(*keep, "is_dup")

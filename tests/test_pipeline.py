@@ -224,3 +224,44 @@ def test_degenerate_identical_corpus(spark):
     # LSH saw exactly one representative -> zero candidate pairs needed
     assert res.candidates.count() == 0
     assert res.skew_report.count() == 0
+
+
+def test_stage_lineage_from_footers_and_jobless_reads(spark, tmp_path):
+    """Stage lineage (rows per part file, from the parquet footers) counts
+    each stage's output exactly, a 0-row stage included; a resumed stage
+    reads back with no Spark job and the schema parquet would infer."""
+    import dataclasses
+
+    from lshdedup.checkpoint import StageRunner
+
+    # distinct captions and pHashes: nothing collapses, exact_edges is empty
+    df = spark.createDataFrame(
+        [(f"i{n}", f"caption number {n} " * 3, n << 20) for n in range(40)],
+        ["image_id", "caption", "phash"],
+    )
+    cfg = dataclasses.replace(CFG, checkpoint_dir=str(tmp_path), run_id="lineage")
+    runner = dedup_pipeline(spark, df, cfg).extra["runner"]
+    done = [e for e in runner.events if not e["resumed"]]
+    assert [e["stage"] for e in done] == [
+        "reps", "exact_edges", "signatures", "candidates", "verified", "clusters"
+    ]
+    for e in done:
+        out = spark.read.parquet(runner._path(e["stage"]))
+        assert e["rows"] == out.count(), e["stage"]
+        assert e["n_partitions"] == len(e["partition_rows"])
+        assert sum(e["partition_rows"].values()) == e["rows"]
+    assert done[1]["rows"] == 0 and done[1]["partition_rows"] == {}
+
+    resumed = StageRunner(spark, cfg)
+    sc = spark.sparkContext
+    for e in done:
+        group = f"resume-read-{e['stage']}"
+        sc.setJobGroup(group, group)
+        try:
+            back = resumed.stage(e["stage"], lambda: None)
+            schema = back.schema
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], e["stage"]
+        assert schema == spark.read.parquet(resumed._path(e["stage"])).schema
+    assert all(e["resumed"] for e in resumed.events)
