@@ -78,7 +78,9 @@ class StageRunner:
             if name.startswith("part-") and name.endswith(".parquet"):
                 rows = pq.read_metadata(os.path.join(self._path(stage), name)).num_rows
                 if rows:
-                    parts[int(name.split("-")[1])] = rows
+                    # one task may write several files (maxRecordsPerFile)
+                    p = int(name.split("-")[1])
+                    parts[p] = parts.get(p, 0) + rows
         return {
             "rows": sum(parts.values()),
             "n_partitions": len(parts),

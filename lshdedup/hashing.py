@@ -448,18 +448,13 @@ def char_gram_hashes(texts, k: int) -> tuple[np.ndarray, np.ndarray]:
     offs, data = _string_buffers(texts)
     base = offs[0]
     body = data[base : offs[-1]]
-    ascii_only = body.size == 0 or int(body.max()) < 0x80
-    if ascii_only:                                 # every byte is a code point
-        first_cp = offs[:-1] - base
-        n_cp = np.diff(offs)
-    else:
-        is_start = (body & 0xC0) != 0x80
-        cps = np.flatnonzero(is_start) + base      # byte offset of each code point
-        cps = np.append(cps, offs[-1])             # + the end of the last row
-        ccum = np.zeros(body.size + 1, dtype=np.int64)
-        np.cumsum(is_start, out=ccum[1:])
-        first_cp = ccum[offs[:-1] - base]          # row's first index into cps
-        n_cp = ccum[offs[1:] - base] - first_cp
+    is_start = (body & 0xC0) != 0x80
+    cps = np.flatnonzero(is_start) + base          # byte offset of each code point
+    cps = np.append(cps, offs[-1])                 # + the end of the last row
+    ccum = np.zeros(body.size + 1, dtype=np.int64)
+    np.cumsum(is_start, out=ccum[1:])
+    first_cp = ccum[offs[:-1] - base]              # row's first index into cps
+    n_cp = ccum[offs[1:] - base] - first_cp
     grams = np.maximum(n_cp - (k - 1), 1)
     total = int(grams.sum())
     gram_offs = np.zeros(n + 1, dtype=np.int64)
@@ -469,21 +464,17 @@ def char_gram_hashes(texts, k: int) -> tuple[np.ndarray, np.ndarray]:
     cp0 = np.repeat(first_cp - gram_offs[:-1], grams)
     cp0 += np.arange(total, dtype=np.int64)
     span = np.repeat(np.minimum(n_cp, k), grams)
-    if ascii_only:
-        start, lens = cp0 + base, span
-    else:
-        # a row's first code point starts at its first byte, and the code
-        # point after its last starts at the next row's first byte, so
-        # spans of short and empty rows need no special case
-        start = cps[cp0]
-        cp0 += span
-        lens = cps[cp0] - start
+    # a row's first code point starts at its first byte, and the code point
+    # after its last starts at the next row's first byte, so spans of short
+    # and empty rows need no special case
+    start = cps[cp0]
+    cp0 += span
+    lens = cps[cp0] - start
     h = np.full(total, _FNV_OFFSET, dtype=U64)
     b = np.empty(total, dtype=U64)
-    uniform = total == 0 or int(lens.min()) == int(lens.max())
     for t in range(int(lens.max()) if total else 0):
         np.copyto(b, data.take(start, mode="clip"), casting="unsafe")
-        live = True if uniform else lens > t
+        live = lens > t
         np.bitwise_xor(h, b, out=h, where=live)
         np.multiply(h, _FNV_PRIME, out=h, where=live)
         start += 1

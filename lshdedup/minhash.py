@@ -230,10 +230,12 @@ def merge_signatures_expr(sig_a: Column, sig_b: Column) -> Column:
 
 def minhash_similarity_expr(sig_a: Column, sig_b: Column) -> Column:
     """Estimated Jaccard = fraction of equal lanes (minhash.h:188-207),
-    as a native expression, for ad-hoc queries over signature pairs.
-    verify_pairs computes the same quotient in its Arrow pair kernel
-    (verify.lane_agreement): this form runs two interpreted lambdas per
-    lane.
+    as a native expression.  No package code calls it: verify_pairs
+    computes the same quotient in its Arrow pair kernel
+    (verify.lane_agreement).  It stays as the tests' reference for that
+    kernel, which must agree with it on equal-length, ragged and null
+    signatures (test_verify.py).  Empty signatures differ: here 0/0 raises
+    under ANSI, the kernel gives NULL; no signature UDF emits one.
 
     size(filter(zip_with(=))) instead of aggregate(zip_with(cast)) — the
     same integer equal-lane count (bit-identical quotient), measured ~3x

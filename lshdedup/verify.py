@@ -138,18 +138,13 @@ def lane_agreement(sig_a: pa.Array, sig_b: pa.Array) -> tuple[np.ndarray, np.nda
             valid &= ~sig.is_null().to_numpy(zero_copy_only=False)
     va = sig_a.values.to_numpy()
     vb = sig_b.values.to_numpy()
-    m = int(lens[0]) if n else 0
-    if valid.all() and (lens == m).all():
-        # every pair has m lanes: the child buffers are (n, m) matrices
-        eq = (
-            va[oa[0] : oa[0] + n * m].reshape(n, m) == vb[ob[0] : ob[0] + n * m].reshape(n, m)
-        ).sum(axis=1)
-    else:
-        rows = np.flatnonzero(valid)
-        rl = lens[rows]
-        rep = np.repeat(rows, rl)
-        lane = np.arange(int(rl.sum()), dtype=np.int64) - np.repeat(np.cumsum(rl) - rl, rl)
-        eq = np.bincount(rep, weights=va[oa[rep] + lane] == vb[ob[rep] + lane], minlength=n)
+    # one (row, lane) entry per lane of each comparable pair, gathered
+    # from the flattened child buffers
+    rows = np.flatnonzero(valid)
+    rl = lens[rows]
+    rep = np.repeat(rows, rl)
+    lane = np.arange(int(rl.sum()), dtype=np.int64) - np.repeat(np.cumsum(rl) - rl, rl)
+    eq = np.bincount(rep, weights=va[oa[rep] + lane] == vb[ob[rep] + lane], minlength=n)
     sim = np.zeros(n, dtype=np.float64)
     np.divide(eq, lens, out=sim, where=valid)
     return sim, valid

@@ -6,6 +6,8 @@ cluster co-membership (the pipeline's output contract is cluster
 assignments; verified pairs + exact-dup edges both feed CC).
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -265,3 +267,15 @@ def test_stage_lineage_from_footers_and_jobless_reads(spark, tmp_path):
         assert sc.statusTracker().getJobIdsForGroup(group) == [], e["stage"]
         assert schema == spark.read.parquet(resumed._path(e["stage"])).schema
     assert all(e["resumed"] for e in resumed.events)
+
+    # a task that writes several part files (maxRecordsPerFile) is one
+    # partition whose rows are the sum over its files
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+    try:
+        resumed.stage("split", lambda: spark.range(10).repartition(2))
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    split = resumed.events[-1]
+    assert len([f for f in os.listdir(resumed._path("split")) if f.startswith("part-")]) == 10
+    assert split["rows"] == 10 and split["n_partitions"] == 2
+    assert sum(split["partition_rows"].values()) == 10

@@ -4,9 +4,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from lshdedup.config import DedupConfig
-from lshdedup.minhash import add_signatures
+from lshdedup.minhash import add_signatures, minhash_similarity_expr
 from lshdedup.simhash import simhash_udf
-from lshdedup.verify import longest_common_substring_ratio, verify_pairs
+from lshdedup.verify import longest_common_substring_ratio, pair_scores, verify_pairs
 
 
 def test_lcs_ratio():
@@ -313,3 +313,26 @@ def test_ragged_signatures_give_null_mh_sim(spark):
     no_channel = DedupConfig(k=3, n_perm=4, threshold=0.5, use_phash=False)
     got = {(r["id_a"], r["id_b"]) for r in verify_pairs(pairs, docs, no_channel).collect()}
     assert got == {("a", "c")}
+
+
+def test_kernel_mh_sim_matches_native_expression(spark):
+    """The kernel's lane agreement equals minhash_similarity_expr, the
+    native reference, over equal-length, ragged and null signatures."""
+    import random
+
+    rnd = random.Random(3)
+
+    def sig(n):
+        return [rnd.randrange(4) for _ in range(n)]
+
+    rows = [(sig(m), sig(m)) for m in (1, 4, 16, 128) for _ in range(20)]
+    rows += [(sig(4), sig(5)), (sig(128), sig(64)), (sig(3), None), (None, sig(3)), (None, None)]
+    df = spark.createDataFrame(rows, "a array<bigint>, b array<bigint>").repartition(3)
+    got = df.select(
+        minhash_similarity_expr(F.col("a"), F.col("b")).alias("ref"),
+        pair_scores(3, F.col("a"), F.col("b"))["mh_sim"].alias("kernel"),
+    ).collect()
+    assert len(got) == len(rows)
+    assert all(r["ref"] == r["kernel"] for r in got if r["ref"] is not None)
+    assert [r["kernel"] is None for r in got] == [r["ref"] is None for r in got]
+    assert sum(r["ref"] is None for r in got) == 5
